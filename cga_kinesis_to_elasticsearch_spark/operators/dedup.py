@@ -679,9 +679,19 @@ def _span_grams(staged: DataFrame, id_col: str, w: int) -> DataFrame:
         .withColumn(
             # 2^31 multiplier: __p is a 32-bit int, so (id << 31) + p is
             # collision-free and order-preserving for any non-negative
-            # numeric id < 2^32 — no silent key aliasing on huge docs
+            # numeric id < 2^32 — no silent key aliasing on huge docs.
+            # Ids outside that range would overflow into another doc's
+            # keys, so they fail the query instead.
             "__key",
-            F.col(id_col).cast("long") * 2147483648 + F.col("__p"),
+            F.when(
+                (F.col(id_col) < 0) | (F.col(id_col) >= 4294967296),
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"span dedup id {id_col} out of range [0, 2^32): "),
+                        F.col(id_col).cast("string"),
+                    )
+                ),
+            ).otherwise(F.col(id_col).cast("long") * 2147483648 + F.col("__p")),
         )
     )
 

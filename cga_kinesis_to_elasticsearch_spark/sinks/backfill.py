@@ -26,14 +26,13 @@ are not produced by the filtered record set.
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..pipeline import PipelineConfig, run_pipeline
-from ._swap import recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_partitions
 
 __all__ = ["BackfillStats", "backfill"]
 
@@ -67,7 +66,7 @@ def backfill(
     root = Path(data_root)
     root.mkdir(parents=True, exist_ok=True)
     recover_and_sweep(root)
-    stats = BackfillStats()
+    before = {p.name for p in root.iterdir()}
     docs = run_pipeline(records, dim, config).drop("log_message", "arrival_ts")
     cached = None
     if dedup_index_path and dedup_text_col:
@@ -77,25 +76,17 @@ def backfill(
         docs = dedup_against_index(
             spark, cached, dedup_index_path, dedup_text_col, "doc_id"
         )
-    staging = root / ".tmp-__backfill__"
-    if staging.exists():
-        shutil.rmtree(staging)
-    docs.write.partitionBy("es_index").parquet(str(staging))
+    # the doc count rides the write job (an empty result stages no
+    # file a re-read could infer a schema from)
+    obs = Observation()
+    promoted = write_partitions(
+        docs.observe(obs, F.count(F.lit(1)).alias("n")), root, "es_index"
+    )
     if cached is not None:
         cached.unpersist()
-    stats.docs_written = spark.read.parquet(str(staging)).count()
-    for part in sorted(staging.iterdir()):
-        if not part.is_dir() or not part.name.startswith("es_index="):
-            continue
-        existed = (root / part.name).exists()
-        tmp = root / f".tmp-{part.name}"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        part.rename(tmp)
-        swap_in(root, part.name)
-        if existed:
-            stats.partitions_replaced += 1
-        else:
-            stats.partitions_added += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    return stats
+    replaced = sum(name in before for name in promoted)
+    return BackfillStats(
+        docs_written=int(obs.get["n"]),
+        partitions_replaced=replaced,
+        partitions_added=len(promoted) - replaced,
+    )

@@ -34,7 +34,6 @@ use version-style guards in the processor chain when that matters).
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -42,7 +41,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from ..operators.ingest import compile_pipeline
 from ..operators.querydsl import compile_query
-from ._swap import promote_staged, recover_and_sweep
+from ._swap import recover_and_sweep, write_partitions
 from .forget import (
     ForgetStats,
     forget,
@@ -158,15 +157,5 @@ def update_by_query(
             ],
             F.col(f"`{part_col}`"),
         )
-        tmp_root = root / ".tmp-rewrite"
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        updated.write.partitionBy(part_col).mode("overwrite").parquet(
-            str(tmp_root)
-        )
-        for marker in tmp_root.glob("_*"):
-            marker.unlink()
-        promote_staged(
-            root, tmp_root, part_col, {v: False for v in vals}
-        )
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        write_partitions(updated, root, part_col, {v: False for v in vals})
         return stats

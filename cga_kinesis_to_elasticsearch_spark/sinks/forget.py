@@ -13,11 +13,10 @@ unit of rewrite is the partition file set. Shape chosen for scale:
    most files outright);
 2. ONE distributed filter job rewrites every affected partition
    (partition pruning keeps untouched days unread; no extra shuffle,
-   so parallelism tracks the input splits), staged under
-   ``.tmp-rewrite`` and promoted per partition through the swap
-   protocol (readers never see a partial partition; a crash at any
-   step is repaired by `recover_and_sweep` — an interrupted staged
-   write is a `.tmp-*` dir it drops);
+   so parallelism tracks the input splits), staged and promoted per
+   partition by `_swap.write_partitions` (readers never see a partial
+   partition; a crash at any step is repaired by `recover_and_sweep`,
+   which drops an interrupted staged write);
 3. untouched partitions are never read twice nor rewritten — cost is
    bounded by the data that actually contains the targets.
 
@@ -40,14 +39,13 @@ AGAIN over the index directory, keyed on the forgotten ids::
 
 from __future__ import annotations
 
-import shutil
 from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ._swap import promote_staged, recover_and_sweep
+from ._swap import recover_and_sweep, write_partitions
 
 __all__ = [
     "ForgetStats",
@@ -150,31 +148,18 @@ def forget(
         # partition filter prunes untouched days at the scan, no extra
         # shuffle (parallelism = input splits, output files per
         # partition track the input layout), then each partition dir is
-        # promoted through the same crash-safe swap. An interrupted
-        # batched write leaves only `.tmp-*` dirs, which
-        # recover_and_sweep drops. Promotion matches the dir names
-        # Spark ACTUALLY wrote (escaping-safe) and only swaps in an
-        # empty dir when the match scan counted the WHOLE partition as
-        # deleted — any other staged/touched mismatch raises.
-        tmp_root = root / ".tmp-rewrite"
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        (
-            df.filter(touched_values_predicate(part_col, vals))
-            .filter(~hit)
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(str(tmp_root))
-        )
-        for marker in tmp_root.glob("_*"):
-            marker.unlink()
-        promote_staged(
+        # promoted through the same crash-safe swap. Promotion matches
+        # the dir names Spark ACTUALLY wrote (escaping-safe) and only
+        # swaps in an empty dir when the match scan counted the WHOLE
+        # partition as deleted — any other staged/touched mismatch
+        # raises.
+        write_partitions(
+            df.filter(touched_values_predicate(part_col, vals)).filter(~hit),
             root,
-            tmp_root,
             part_col,
             {
                 r[part_col]: int(r["__n_match"]) == int(r["__n_total"])
                 for r in touched
             },
         )
-        shutil.rmtree(tmp_root, ignore_errors=True)
         return stats

@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..pipeline import PipelineConfig, run_pipeline
 from ..sinks.bulk import ParquetIndexSink
@@ -309,9 +310,14 @@ def run_stream(
                 # the poison count only reads the populated records
                 # cache — submit it concurrently so it back-fills the
                 # sink write's task tail (guide §2.6) instead of
-                # running as its own serial job afterwards
+                # running as its own serial job afterwards. The wrapper
+                # copies this thread's Spark local properties (the
+                # stream's job group and description) into the pool
+                # thread, so cancel and per-group attribution cover it.
                 with ThreadPoolExecutor(max_workers=1) as pool:
-                    poison_fut = pool.submit(poison.count)
+                    poison_fut = pool.submit(
+                        inheritable_thread_target(spark)(poison.count)
+                    )
                     # the idx_counts aggregation already knows the
                     # batch's largest index — let the sink scale its
                     # file fan-out to it (small batch -> 1 file/index)

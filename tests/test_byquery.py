@@ -82,3 +82,33 @@ class TestUpdateByQuery:
                 {"query": {"match_all": {}}},
                 [{"grok": {"field": "status", "patterns": ["%{WORD:w}"]}}],
             )
+
+    def test_interrupted_swap_recovers_before_update(self, spark, tmp_path):
+        from cga_kinesis_to_elasticsearch_spark.sinks._swap import part_paths
+
+        root = tmp_path / "lake"
+        _write_lake(spark, root)
+        # crash window of an earlier swap on a partition the update
+        # touches ('b') and on one it does not ('a')
+        for part in ("es_index=a", "es_index=b"):
+            final, _, old = part_paths(root, part)
+            final.rename(old)
+        stats = update_by_query(
+            spark,
+            root,
+            {"query": {"range": {"n": {"gte": 30}}}},
+            [{"set": {"field": "status", "value": "audited"}}],
+        )
+        assert stats.partitions_scanned == 3
+        assert stats.rows_updated == 3 and stats.partitions_rewritten == 2
+        rows = {r.doc_id: (r.es_index, r.status, r.n)
+                for r in spark.read.parquet(str(root)).collect()}
+        # the recovered partitions took part; nothing was lost
+        assert rows == {
+            1: ("a", "keep", 10), 2: ("a", "drop", 20),
+            3: ("b", "audited", 30), 4: ("b", "audited", 40),
+            5: ("c", "audited", 50),
+        }
+        assert not any(
+            p.name.startswith((".tmp-", ".old-")) for p in root.iterdir()
+        )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from cga_kinesis_to_elasticsearch_spark.operators.dedup import span_dedup
@@ -158,3 +159,34 @@ class TestEmptyAppendRobustness:
         out2 = _run_batches(spark, root, [_BATCH1])
         assert out2[0][1] == 0  # batch still processes fine
         assert read_span_index(spark, root).count() > 0
+
+
+class TestIdRange:
+    """The (id * 2^31 + pos) key only encodes ids in [0, 2^32): an id
+    outside it would alias another document's keys, so both span-dedup
+    entry points fail the query instead of rewriting the wrong docs."""
+
+    @pytest.mark.parametrize("bad_id", [-1, 2**32])
+    def test_out_of_range_ids_raise(self, spark, tmp_path, bad_id):
+        rows = [(bad_id, "alpha beta gamma delta"), (7, "alpha beta gamma x")]
+        with pytest.raises(Exception, match="out of range"):
+            span_dedup(_df(spark, rows), "text", "doc_id", w=_W).collect()
+        with pytest.raises(Exception, match="out of range"):
+            span_dedup_against_index(
+                spark, _df(spark, rows), tmp_path / "idx", "text", "doc_id",
+                w=_W,
+            ).collect()
+
+    def test_in_range_bigint_ids_pass(self, spark, tmp_path):
+        top = 2**32 - 1
+        rows = [(top, "alpha beta gamma delta"), (0, "alpha beta gamma x")]
+        one = {
+            r["doc_id"]: r["n_removed"]
+            for r in span_dedup(
+                _df(spark, rows), "text", "doc_id", w=_W
+            ).collect()
+        }
+        # doc 0 owns the shared span (smallest id first)
+        assert one == {0: 0, top: 3}
+        inc = _run_batches(spark, tmp_path / "idx", [rows])
+        assert {k: v[1] for k, v in inc.items()} == one

@@ -131,6 +131,28 @@ class TestPoisonBucket:
         assert row.shard_id == "shard-x"
         assert bytes(row.data).startswith(b"\x00\x01")
 
+    def test_poison_count_job_carries_stream_job_group(
+        self, spark, dim, fixture_dir, tmp_path
+    ):
+        """The poison count runs on a pool thread; it must still carry
+        the stream's job group, or group cancel and per-group
+        attribution miss it."""
+        tracker = spark.sparkContext.statusTracker()
+        stream = read_raw_record_stream(spark, fixture_dir)
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        cfg = StreamConfig(
+            checkpoint_location=str(tmp_path / "ck"),
+            available_now=True,
+            pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+        )
+        query, metrics = run_stream(
+            spark, stream, lambda s: dim, ParquetIndexSink(tmp_path / "sink"), cfg
+        )
+        drain(query)
+        assert metrics.errors_count == N_POISON  # the count ran
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+        assert tracker.getJobIdsForGroup(str(query.runId))
+
 
 class TestReplayIdempotence:
     def test_restart_same_checkpoint_no_new_docs(

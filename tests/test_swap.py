@@ -1,15 +1,25 @@
 """Crash-safe swap protocol (sinks/_swap.py): every interruption point
-leaves a state recover_and_sweep repairs to the last durable content,
-for all three consumers (sketchmaint, rollup, compaction)."""
+leaves a state recover_and_sweep repairs to the last durable content.
+The sink-level crash cases here cover sketchmaint, rollup and
+compaction; the other maintained-state sinks pin theirs in their own
+test modules. TestCommitBoundary keeps the commit decision inside
+sinks/_swap.py."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
+
+import cga_kinesis_to_elasticsearch_spark
 
 from cga_kinesis_to_elasticsearch_spark.sinks._swap import (
     part_paths,
     recover_and_sweep,
     swap_in,
+    write_partitions,
 )
 
 
@@ -63,6 +73,44 @@ class TestSwapIn:
         swap_in(tmp_path, "day=d")
         assert (final / "part-0.parquet").read_text() == ".tmp-day=d"
         assert not old.exists()
+
+
+
+class TestWritePartitions:
+    def _seed(self, spark, root):
+        spark.createDataFrame([("a", 1)], "k string, v long").write.partitionBy(
+            "k"
+        ).parquet(str(root))
+
+    def _state(self, spark, root):
+        return sorted(tuple(r) for r in spark.read.parquet(str(root)).collect())
+
+    def test_promotes_every_staged_partition(self, spark, tmp_path):
+        root = tmp_path / "t"
+        self._seed(spark, root)
+        df = spark.createDataFrame([("a", 2), ("b", 3)], "k string, v long")
+        assert write_partitions(df, root, "k") == ["k=a", "k=b"]
+        assert self._state(spark, root) == [(2, "a"), (3, "b")]
+        assert not any(p.name.startswith(".tmp-") for p in root.iterdir())
+
+    @pytest.mark.parametrize(
+        "rows, expected, match",
+        [
+            ([("a", 2), ("c", 3)], {"a": False}, "never touched"),
+            ([("a", 2)], {"a": False, "b": False}, "surviving rows"),
+            ([("a", 2)], {"a": False, "b": True}, "no original directory"),
+        ],
+    )
+    def test_mismatch_raises_before_anything_is_promoted(
+        self, spark, tmp_path, rows, expected, match
+    ):
+        root = tmp_path / "t"
+        self._seed(spark, root)
+        df = spark.createDataFrame(rows, "k string, v long")
+        with pytest.raises(RuntimeError, match=match):
+            write_partitions(df, root, "k", expected)
+        recover_and_sweep(root)
+        assert self._state(spark, root) == [(1, "a")]
 
 
 class TestSketchCrashRecovery:
@@ -202,3 +250,83 @@ class TestCompactionClustering:
             spark.read.parquet(str(part)).agg({"event_id": "count"}).first()[0]
             == 200
         )
+
+
+_SWAP_PRIMITIVES = {"swap_in", "part_paths", "promote_staged"}
+
+
+def _commit_violations(source: str) -> list[str]:
+    """Code (not docstrings or comments) that builds a temp/old swap
+    path or calls a swap primitive directly."""
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and (".tmp-" in node.value or ".old-" in node.value)
+        ):
+            found.append(f"line {node.lineno}: swap path {node.value!r}")
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in _SWAP_PRIMITIVES:
+                found.append(f"line {node.lineno}: calls {name}")
+        elif isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if a.name in _SWAP_PRIMITIVES:
+                    found.append(f"line {node.lineno}: imports {a.name}")
+    return found
+
+
+class TestCommitBoundary:
+    """Only sinks/_swap.py decides how a rewritten state directory
+    becomes visible; every other module commits through its writers."""
+
+    def test_no_module_outside_swap_builds_swap_paths(self):
+        pkg = Path(cga_kinesis_to_elasticsearch_spark.__file__).parent
+        swap = pkg / "sinks" / "_swap.py"
+        modules = sorted(pkg.rglob("*.py"))
+        assert swap in modules and len(modules) > 50
+        bad = {
+            str(m.relative_to(pkg)): v
+            for m in modules
+            if m != swap and (v := _commit_violations(m.read_text()))
+        }
+        assert bad == {}
+
+    @pytest.mark.parametrize(
+        "source",
+        [
+            'tmp = root / f".tmp-{part}"',
+            'staging = root / ".old-x"',
+            "swap_in(root, part)",
+            "_, tmp, _ = part_paths(root, part)",
+            "from ._swap import promote_staged",
+            "_swap.swap_in(root, part)",
+        ],
+    )
+    def test_scanner_flags_swap_code(self, source):
+        assert _commit_violations(source)
+
+    def test_scanner_ignores_docstrings_and_comments(self):
+        source = (
+            '"""Writes .tmp-<part>, then swap_in(root, part)."""\n'
+            "def f():\n"
+            '    """part_paths gives the .old-<part> path."""\n'
+            "    # swap_in(root, part) and .tmp- dirs\n"
+            "    return 1\n"
+        )
+        assert _commit_violations(source) == []

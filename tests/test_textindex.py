@@ -348,6 +348,44 @@ class TestIncrementalAppend:
         assert after == before
         assert spark.read.parquet(f"{root}/stats").first().asDict() == stats_before
 
+    def test_interrupted_bucket_and_stats_swaps_recover(
+        self, spark, sf_dir, tmp_path
+    ):
+        from cga_kinesis_to_elasticsearch_spark.io import load_table
+        from cga_kinesis_to_elasticsearch_spark.sinks._swap import part_paths
+        from cga_kinesis_to_elasticsearch_spark.sinks.textindex import (
+            append_to_text_index,
+            build_text_index,
+        )
+
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        root = tmp_path / "t"
+        append_to_text_index(spark, docs.filter(F.col("doc_id") < 100), root)
+        # crash window of an earlier append: one postings bucket and
+        # stats/ renamed away, their new content never landed
+        bucket = sorted((root / "postings").glob("bucket=*"))[0].name
+        for d, part in ((root / "postings", bucket), (root, "stats")):
+            final, _, old = part_paths(d, part)
+            final.rename(old)
+        append_to_text_index(spark, docs.filter(F.col("doc_id") >= 100), root)
+        ref = tmp_path / "ref"
+        build_text_index(docs, ref)
+
+        def tables(r):
+            post = {
+                (x["term"], x["doc_id"], x["tf"], tuple(x["positions"]))
+                for x in spark.read.parquet(f"{r}/postings").collect()
+            }
+            return post, spark.read.parquet(f"{r}/stats").first().asDict()
+
+        # the first batch's postings in the crashed bucket came back
+        assert tables(root) == tables(ref)
+        assert not any(
+            p.name.startswith((".tmp-", ".old-"))
+            for d in (root, root / "postings")
+            for p in d.iterdir()
+        )
+
 
 class TestStreamingIndexHook:
     def test_stream_builds_searchable_index(self, spark, sf_dir, tmp_path):
